@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -99,32 +98,18 @@ object Bench {
     val nprocStart = nProcs()
     val storeStateStart = storeState()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // local-iteration filter: comma-separated query names; unset = all
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the NTZ→LTZ events path interprets naive stamps in the SESSION
-      // timezone: without pinning UTC, a non-UTC host would make the
-      // bench time a subtly different workload (shifted event instants,
-      // different sessionization groups) than the UTC Verify gate
-      // certified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf(spark)
-    GraftConf.applyEnvOverrides(spark)
+    val spark = GraftConf.session()
     // JIT/codegen warmup so the first measured query doesn't absorb
     // JVM startup; queries run in sorted name order so per-query
     // numbers are comparable across rounds (Map order shifts when
     // keys are added). The smallest-sf pass exercises the heavy codegen
     // families (tokenizer/shingle, vector expressions, windows) —
     // measured ~4 s of one-time compilation otherwise lands on
-    // whichever family's first query runs it (CcPhaseProbe: jaccard
-    // 6.6 s cold vs 2.6 s warm). The warm dir derives from the bench
+    // whichever family's first query runs it (jaccard 6.6 s cold vs
+    // 2.6 s warm, BENCH_NOTES.md). The warm dir derives from the bench
     // dir (sibling sf0.001) so a relocated testdata root still warms;
     // a failed warmup is WARNED, not swallowed — silence would cost
     // the cross-round comparability this exists for.
@@ -135,11 +120,11 @@ object Bench {
     }
     // dedup_containment is warmed separately from the jaccard family:
     // its explode→collect materialization + array_intersect verify is a
-    // distinct codegen shape (~9 s of one-time compile measured by
-    // BenchOne at round 8 — iter 1 12.3 s vs steady state 2.6 s)
+    // distinct codegen shape (~9 s of one-time compile measured at
+    // round 8 — iter 1 12.3 s vs steady state 2.6 s, BENCH_NOTES.md)
     // win_lag_features added round 18: the 14-lag window pipeline is its
-    // own codegen shape (~4 s of one-time compile measured by the
-    // ForecastPhaseProbe lag phase, 6.7 s iter 1 vs 2.1 s steady) and
+    // own codegen shape (~4 s of one-time compile in the lag phase,
+    // 6.7 s cold vs 2.1 s steady, OPTIMIZATION_r18.md §1) and
     // alphabetical order lands it on ml_forecast, the largest bench line
     for (q <- Seq("dedup_ngram_jaccard", "dedup_containment",
         "sim_knn_brute", "agg_daily_product",

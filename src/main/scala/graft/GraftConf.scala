@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-wide session tuning, applied by Verify/Bench/tests (and safe
-  * to apply in any user session).
+/** Engine-wide session tuning. [[session]] is the one way every main
+  * and the test suite start a session; [[apply]] is the tuning alone,
+  * safe to apply to any user session.
   *
   * Rationale (measured at sf0.1 with .explain — see BENCH_NOTES.md):
   *  - `InferFiltersFromGenerate` and constraint propagation both
@@ -13,8 +14,8 @@ import org.apache.spark.sql.SparkSession
   *    the tokenizer regex per element access. This testdata has no
   *    nullable columns, so the inferred filters buy nothing.
   *  - AQE stays ON (runtime re-plan, skew handling); shuffle
-  *    partitions are set by the caller to match cores (local) or
-  *    cluster parallelism.
+  *    partitions match cores ([[session]]) or, for a session built
+  *    elsewhere, the owner's cluster parallelism.
   */
 object GraftConf {
   private val ExcludedRule =
@@ -47,20 +48,42 @@ object GraftConf {
     spark
   }
 
-  /** Experiment hook shared by the Verify and Bench mains:
-    * `SPARK_GRAFT_CONF` is a comma-separated list of `k=v` session-conf
-    * overrides (e.g. `spark.sql.adaptive.enabled=false` for an AQE-off
-    * invariance audit); unset for driver runs. Blank segments (a
-    * set-but-empty var, a trailing comma) are no-ops; a NON-blank
-    * segment without `=` is a typo'd ablation and fails LOUDLY — a
-    * silently-dropped override would record baseline numbers labeled
-    * as the ablation. */
-  def applyEnvOverrides(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(',')
-      .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="),
-          s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+  /** Cores a session gets when the caller does not pin them:
+    * `SPARK_GRAFT_CPUS` if set, else every processor the JVM sees. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The engine session: `local[cores]` with one shuffle partition per
+    * core, session time zone UTC (the NTZ→LTZ events path interprets
+    * naive stamps in the session zone, so every run must see the
+    * workload the UTC oracle gate certified), UI off, log level WARN,
+    * then [[apply]] and the `SPARK_GRAFT_CONF` overrides. */
+  def session(cores: Int = defaultCores): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    apply(spark)
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseOverrides(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    })
+    spark
+  }
+
+  /** Parses `SPARK_GRAFT_CONF`, a comma-separated list of `k=v`
+    * session-conf overrides (e.g. `spark.sql.adaptive.enabled=false`
+    * for an AQE-off invariance audit). Blank segments (a set-but-empty
+    * var, a trailing comma) are no-ops; a NON-blank segment without
+    * `=` is a typo'd ablation and fails LOUDLY — a silently-dropped
+    * override would record baseline numbers labeled as the ablation. */
+  private[graft] def parseOverrides(spec: String): Seq[(String, String)] =
+    spec.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      require(kv.contains("="), s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
+      val Array(k, v) = kv.split("=", 2)
+      (k.trim, v.trim)
+    }
 }

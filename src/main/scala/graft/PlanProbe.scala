@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
@@ -138,14 +137,7 @@ object PlanProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plan-probe")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf(spark)
+    val spark = GraftConf.session()
     val registry = SparkEntry.queries
     val selected = sys.env.get("SPARK_GRAFT_PLAN_ONLY") match {
       case Some("all") => registry.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sweeps ANN parameters (LSH signature bits × tables, IVF
   * probe count) and prints recall@10 against the brute-force baseline —
   * the measurement behind the pinned defaults in SimilarityQueries and
@@ -12,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf(spark)
+    val spark = GraftConf.session()
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -2,7 +2,7 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** 10× scale rehearsal for the quadratic-hazard dedup families
@@ -155,11 +155,22 @@ object ScaleRehearsal {
   private def embCols(d: DataFrame, labelCol: String): DataFrame =
     d.select(col("vec_id"), col("embedding"), col(labelCol).as("label"))
 
+  /** One evaluation of `f`: its result and its wall seconds. */
+  private def clocked[T](f: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** [[clocked]] after one unmeasured warm pass of `f`, so codegen and
+    * JIT compile land there and not on the clock. */
+  private def timed[T](f: => T): (T, Double) = { f; clocked(f) }
+
   def main(args: Array[String]): Unit = {
     import graft.operators.{DedupQueries => D, MultimodalQueries => M,
       SimilarityQueries => S}
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftConf.defaultCores
     // ×30 is the default ceiling for the NON-adaptive family grid (the
     // adaptive pigeonhole families rehearse to ×100 below): the grid
     // includes pipe_semdedup_fixed_k, the DELIBERATE quadratic-hazard
@@ -215,14 +226,7 @@ object ScaleRehearsal {
       entityHotScales.filter(_ => famActive("entity_hot")))
       .distinct.sorted
     val outRoot = "/tmp/graft_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf(spark)
+    val spark = GraftConf.session(cpus)
 
     // deterministic corpus generation, one parquet dir per scale
     for (k <- allScales) {
@@ -351,10 +355,7 @@ object ScaleRehearsal {
       // warm pass first (codegen/JIT compile lands here, not in the
       // measured run — the containment family alone costs ~9 s of
       // one-time compile), then the timed pass
-      fam.output(input).count()
-      val t0 = System.nanoTime()
-      val outN = fam.output(input).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (outN, sec) = timed(fam.output(input).count())
       val candN = fam.candidates(input).count()
       val (keyCols, keyed) = fam.buckets(input)
       val (maxB, nB) = bucketStats(keyed, keyCols)
@@ -414,11 +415,8 @@ object ScaleRehearsal {
           .write.mode("overwrite").parquet(postPath)
         def admissionChunks = spark.read.parquet(postPath).unionByName(
           D.chunksAtLevel(D.simhashesOn(batchDocs), "simhash", level))
-        D.incrementalHammingOfChunks(admissionChunks, "simhash").count() // warm
-        val t0 = System.nanoTime()
-        val outN = D.incrementalHammingOfChunks(admissionChunks, "simhash")
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (outN, sec) = timed(
+          D.incrementalHammingOfChunks(admissionChunks, "simhash").count())
         val candN = D.incrementalHammingCandidates(admissionChunks, "simhash")
           .count()
         System.err.println(
@@ -466,10 +464,8 @@ object ScaleRehearsal {
         val allVecs = vecs(existing.unionByName(embBatch))
         def admissionSigs = spark.read.parquet(postPath).unionByName(
           S.embSigsOf(vecs(embBatch), bits, dim))
-        S.incrementalEmbOfSigs(admissionSigs, allVecs).count() // warm
-        val t0 = System.nanoTime()
-        val outN = S.incrementalEmbOfSigs(admissionSigs, allVecs).count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (outN, sec) =
+          timed(S.incrementalEmbOfSigs(admissionSigs, allVecs).count())
         val candN = S.incrementalEmbCandidates(admissionSigs).count()
         System.err.println(
           s"[scale] dedup_embedding_incremental x$k: existing=$nEx " +
@@ -506,12 +502,6 @@ object ScaleRehearsal {
       val batchDocs = docReplica(Tables.documents(spark, baseDir), 999)
         .withColumn("doc_id", col("doc_id") * 5)
       val nBatch = batchDocs.count()
-      def timed[T](f: => Long): (Long, Double) = {
-        f // warm pass: codegen/JIT lands here
-        val t0 = System.nanoTime()
-        val n = f
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
       def row(k: Int, nEx: Long, cand: Long, out: Long, sec: Double,
           extra: String = ""): String =
         s""""x$k":{"n_existing":$nEx,"n_batch":$nBatch,""" +
@@ -697,12 +687,6 @@ object ScaleRehearsal {
       val batchDocs = docReplicaOverlap(Tables.documents(spark, baseDir), 999)
         .withColumn("doc_id", col("doc_id") * 5)
       val nBatch = batchDocs.count()
-      def timed(f: => Long): (Long, Double) = {
-        f // warm pass: codegen/JIT lands here
-        val t0 = System.nanoTime()
-        val n = f
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
       val ovRows = for (k <- ovScales) yield {
         val dir = s"$outRoot/x${k}ov"
         val existing = Tables.documents(spark, dir)
@@ -787,10 +771,7 @@ object ScaleRehearsal {
         val nIn = cust.count()
         val planted = cust
           .where(col("c_name") === "Graft Default Entity 00").count()
-        DD.entityBlockOn(cust).count() // warm
-        val t0 = System.nanoTime()
-        val outN = DD.entityBlockOn(cust).count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (outN, sec) = timed(DD.entityBlockOn(cust).count())
         val candN = DD.entityBlockCandidatesOn(cust).count()
         val blocked = DD.entityBlocked(cust)
         val agg = blocked.groupBy(col("blk")).agg(count(lit(1)).as("bf"))
@@ -835,13 +816,10 @@ object ScaleRehearsal {
       val chainRows = for (i <- 1 to nBatches) yield {
         val batch = docReplica(Tables.documents(spark, baseDir), 2000 + i)
           .withColumn("doc_id", col("doc_id") * lit(20L) + lit(i.toLong))
-        val t0 = System.nanoTime()
-        val served = ArtifactStore.appendedCached(spark, chainPath, s"b$i",
-          autoCompactAt = 8)(
+        val (nRows, sec) = clocked(ArtifactStore.appendedCached(spark,
+          chainPath, s"b$i", autoCompactAt = 8)(
           sys.error("chain rehearsal: base re-derived"))(
-          D.ngramPostingsOn(batch))
-        val nRows = served.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+          D.ngramPostingsOn(batch)).count())
         val reader = ArtifactStore.appendedCached(spark, chainPath, s"b$i",
           autoCompactAt = 8)(
           sys.error("reader re-derived"))(sys.error("reader re-signed"))
@@ -959,13 +937,10 @@ object ScaleRehearsal {
           new java.io.File(chainA))
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(ArtifactStore.childPathFor(chainA, "ingA")))
-        val t0 = System.nanoTime()
-        ArtifactStore.save(D.dfFilteredPostings(baseInv), chainA)
-        val secBase = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val nServed = D.ngramFilteredMaintainedAppend(spark, chainA,
-          baseInv, batchInv, "ingA").count()
-        val secAppend = (System.nanoTime() - t1) / 1e9
+        val secBase =
+          clocked(ArtifactStore.save(D.dfFilteredPostings(baseInv), chainA))._2
+        val (nServed, secAppend) = clocked(D.ngramFilteredMaintainedAppend(
+          spark, chainA, baseInv, batchInv, "ingA").count())
         val appended = !ArtifactStore.foldedTags(chainA).contains("ingA")
         // the pre-m2 reference pays derive + a FULL store rewrite at
         // every corpus version — include the write (the corpus-sized
@@ -973,20 +948,16 @@ object ScaleRehearsal {
         val chainC = s"$dir/store/fpostfull_v1_eeeeeeeeeeee"
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(chainC))
-        val t2 = System.nanoTime()
-        ArtifactStore.save(
-          D.dfFilteredPostings(baseInv.unionByName(batchInv)), chainC)
-        val secFull = (System.nanoTime() - t2) / 1e9
+        val secFull = clocked(ArtifactStore.save(
+          D.dfFilteredPostings(baseInv.unionByName(batchInv)), chainC))._2
         val chainB = s"$dir/store/fpostboil_v1_dddddddddddd"
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(chainB))
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(ArtifactStore.childPathFor(chainB, "ingB")))
         ArtifactStore.save(D.dfFilteredPostings(baseInv), chainB)
-        val t3 = System.nanoTime()
-        D.ngramFilteredMaintainedAppend(spark, chainB, baseInv, boilInv,
-          "ingB").count()
-        val secRebuild = (System.nanoTime() - t3) / 1e9
+        val secRebuild = clocked(D.ngramFilteredMaintainedAppend(spark,
+          chainB, baseInv, boilInv, "ingB").count())._2
         val rebuilt = ArtifactStore.foldedTags(chainB).contains("ingB")
         System.err.println(s"[scale] fpost_maintain x$k: existing=$nEx " +
           s"append=${j(secAppend)} full=${j(secFull)} " +
@@ -1017,12 +988,8 @@ object ScaleRehearsal {
       val admitRows = for (k <- admitScales) yield {
         val dir = s"$outRoot/x$k"
         val nDocs = Tables.documents(spark, dir).count()
-        val t0 = System.nanoTime()
-        val out = D.pipeAdmitFull(spark, dir).count()
-        val secCold = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        D.pipeAdmitFull(spark, dir).count()
-        val secWarm = (System.nanoTime() - t1) / 1e9
+        val (out, secCold) = clocked(D.pipeAdmitFull(spark, dir).count())
+        val secWarm = clocked(D.pipeAdmitFull(spark, dir).count())._2
         System.err.println(s"[scale] admit_full x$k: docs=$nDocs " +
           s"out=$out cold=${j(secCold)} warm=${j(secWarm)}")
         s""""x$k":{"n_docs":$nDocs,"out":$out,""" +
@@ -1122,12 +1089,8 @@ object ScaleRehearsal {
         // pass 1 — the comparable headline: ONE battery call pays the
         // whole steady-state ingest (the r15 protocol, unchanged)
         val rebuilt = rewindDeltas()
-        val t0 = System.nanoTime()
-        val out = D.pipeAdmitFull(spark, dir).count()
-        val secIngest = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        D.pipeAdmitFull(spark, dir).count()
-        val secWarm = (System.nanoTime() - t1) / 1e9
+        val (out, secIngest) = clocked(D.pipeAdmitFull(spark, dir).count())
+        val secWarm = clocked(D.pipeAdmitFull(spark, dir).count())._2
         // pass 2 — the decomposition (r15 judge item 3: name which
         // delta append grows): rewind again, land each store's append
         // on its own clock (ArtifactStore.save is EAGER — the accessor
@@ -1147,14 +1110,8 @@ object ScaleRehearsal {
           "span_anchors" -> (() => D.spanAnchorStore(spark, dir)),
           "simhash_chunks" -> (() => D.simhashChunkStore(spark, dir)),
           "emb_sigs" -> (() => S.embSigsStored(spark, dir))
-        ).map { case (n, f) =>
-          val ts = System.nanoTime()
-          f()
-          n -> (System.nanoTime() - ts) / 1e9
-        }
-        val t2 = System.nanoTime()
-        D.pipeAdmitFull(spark, dir).count()
-        val secProbes = (System.nanoTime() - t2) / 1e9
+        ).map { case (n, f) => n -> clocked(f())._2 }
+        val secProbes = clocked(D.pipeAdmitFull(spark, dir).count())._2
         // pass 3 — the PROBE decomposition (round-17: the r16 verdict
         // asked for the remaining sec_probes growth, 4.3→7.2 s across
         // ×1→×100, to name itself the way the appends did): with every
@@ -1173,11 +1130,7 @@ object ScaleRehearsal {
             D.dedupContainmentIncremental(spark, dir).count()),
           "spans" -> (() => D.dedupSpansIncremental(spark, dir).count()),
           "emb" -> (() => S.dedupEmbIncremental(spark, dir).count())
-        ).map { case (n, f) =>
-          val ts = System.nanoTime()
-          f()
-          n -> (System.nanoTime() - ts) / 1e9
-        }
+        ).map { case (n, f) => n -> clocked(f())._2 }
         val perStoreJson = perStore
           .map { case (n, s) => s""""$n":${j(s)}""" }.mkString("{", ",", "}")
         val perProbeJson = perProbe

@@ -37,12 +37,7 @@ object SchemaSnapshot {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SCHEMAS.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-schema-snapshot")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftConf.session()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
       render(spark))
     println(s"[snapshot] wrote $out")

@@ -1069,8 +1069,9 @@ object SimilarityQueries {
     * Every dot here is the codegen'd DotProduct expression, NOT the
     * zip_with+aggregate HOF: ArrayAggregate is CodegenFallback, and
     * the encode evaluates 8×64 sub-vector dots PER ROW — interpreted,
-    * that was 5.4 s steady-state at sf0.1 (BenchOne); the tight-loop
-    * expression computes the identical left-fold, bit-for-bit. */
+    * that was 5.4 s steady-state at sf0.1 (BENCH_NOTES.md); the
+    * tight-loop expression computes the identical left-fold,
+    * bit-for-bit. */
   private def pqDecodedOn(emb: DataFrame): DataFrame = {
     import graft.functions.VectorExpressions.dot_product
     val d = vecDim(emb)
@@ -1098,7 +1099,7 @@ object SimilarityQueries {
     // come from ONE PqEncode expression: the composed
     // array_min(array(512 × struct)) form exceeded Janino's 64 KB
     // method limit, silently disabling whole-stage codegen for the
-    // stage (5.4 s → 0.9 s steady-state at sf0.1, BenchOne;
+    // stage (5.4 s → 0.9 s steady-state at sf0.1, BENCH_NOTES.md;
     // VectorExpressions documents the bit-identical float contract)
     val cbFlat: Seq[Seq[Double]] =
       (0 until PqSubspaces).flatMap(s => (0 until k).map(j => cbVecs(s)(j).toSeq))

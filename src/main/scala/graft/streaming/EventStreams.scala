@@ -797,6 +797,22 @@ object EventStreams {
     * on the streaming form. */
   val NgramHotMaxKeys: Int = 100000
 
+  /** Order-free identity of an ingest digest frame over
+    * (doc_id, text_hash), for the replay guard below: the row count
+    * and the exact sum of each row's xxhash64. The hashes are widened
+    * to decimal(38,0) before summing — a LONG sum of 64-bit hashes
+    * throws ARITHMETIC_OVERFLOW under ANSI within a few rows — and
+    * summed rather than XOR-folded, so a duplicated row cannot cancel
+    * out against another. Recomputed from the data on both sides,
+    * never stored. */
+  private[graft] def replaySignature(digest: DataFrame): (Long, BigDecimal) = {
+    val r = digest.agg(count(lit(1)),
+      sum(xxhash64(col("doc_id"), col("text_hash"))
+        .cast(DecimalType(38, 0)))).head
+    (r.getLong(0),
+      if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
+  }
+
   /** foreachBatch body of the PRODUCTION ingest loop over the FULL
     * admission surface (round-17 judge item — the r16 digest-chain
     * loop extended to every store `pipe_admit_full` serves from): land
@@ -863,14 +879,9 @@ object EventStreams {
     if (batch.isEmpty) return
     val digestOf = batch.select(col("doc_id"), md5(col("text")).as("text_hash"))
     if (ArtifactStore.tagChained(spark, D.digestStorePath(dir), tag)) {
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)),
-          sum(xxhash64(col("doc_id"), col("text_hash")))).head
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
       val sameBatch = ArtifactStore
         .deltaFrame(spark, D.digestStorePath(dir), tag)
-        .exists(landed => sig(landed) == sig(digestOf))
+        .exists(replaySignature(_) == replaySignature(digestOf))
       if (!sameBatch)
         sys.error(s"stream ingest: batch tag '$tag' already chained for " +
           s"$dir with DIFFERENT content — one non-empty micro-batch per " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -186,5 +186,27 @@ class StreamIngestSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("already chained"),
       s"second non-empty batch must fail loudly, got: ${ex.getMessage}")
+  }
+
+  test("replay signature: a realistic batch (2000 rows) signs under ANSI " +
+    "without overflow, order-free, and duplicate rows do not cancel") {
+    import streaming.EventStreams.replaySignature
+    val n = 2000L
+    def digest(docId: Column): DataFrame = spark.range(n)
+      .select(docId.as("doc_id"))
+      .withColumn("text_hash", md5(col("doc_id").cast("string")))
+    // a LONG sum of 2000 uniform 64-bit hashes overflows almost surely
+    val sig = replaySignature(digest(col("id")))
+    assert(sig._1 == n)
+    assert(sig == replaySignature(
+        digest(col("id")).orderBy(rand(7)).repartition(3)),
+      "the signature must not depend on row order or partitioning")
+    // {d0, d0, d2..} vs {d1, d1, d2..}: same count, and an XOR fold
+    // would sign both as d2 ^ .. because each doubled row cancels
+    val d0Twice = digest(when(col("id") === 1L, 0L).otherwise(col("id")))
+    val d1Twice = digest(when(col("id") === 0L, 1L).otherwise(col("id")))
+    assert(replaySignature(d0Twice)._1 == n)
+    assert(replaySignature(d0Twice) != replaySignature(d1Twice),
+      "doubled rows must not cancel out of the signature")
   }
 }
