@@ -27,10 +27,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    data pointer, the cardinality metadata, and the fold record can
   *    never disagree (they change in one rename), and a rewrite (save
   *    or compaction) leaves the PREVIOUS version fully serviceable
-  *    until the new state file lands. The row count lets chain
-  *    consumers read corpus cardinality (base + deltas) from store
-  *    metadata at plan time — no count job, no probe stage in the
-  *    serving plan (the adaptive pigeonhole level source);
+  *    until the new state file lands. The row count is the sum of the
+  *    written files' footer row-group counts, read in this JVM
+  *    ([[ParquetDir.rowCount]]: no Spark job, no data scan), and it
+  *    lets chain consumers read corpus cardinality (base + deltas)
+  *    from store metadata at plan time — no count job, no probe stage
+  *    in the serving plan (the adaptive pigeonhole level source).
+  *    Every data dir is read through [[ParquetDir.read]], which
+  *    declares the footer's schema, so a load starts no
+  *    schema-inference job either;
   *  - the completion marker `_GRAFT_OK` is written LAST on first save —
   *    after the parquet, the state file, and (for deltas) the lineage
   *    pointer — so a crash mid-save never looks like a complete
@@ -427,10 +432,11 @@ object ArtifactStore {
     * completion marker LAST. A crash at any point leaves either the
     * previous complete artifact (state not yet flipped) or no complete
     * artifact (fresh dir, marker never written) — never a torn one.
-    * The row count is read back from the written parquet's footers
-    * (no data scan). One superseded data version is retained for
-    * in-session readers; older ones and any legacy metadata files are
-    * swept after the flip. */
+    * The row count is summed from the written files' footers in this
+    * JVM ([[ParquetDir.rowCount]]: no Spark job, no data scan), so
+    * a save submits only its write job. One superseded data version is
+    * retained for in-session readers; older ones and any legacy
+    * metadata files are swept after the flip. */
   def save(df: DataFrame, path: String,
       parentOf: Option[String] = None): Unit =
     if (!isUncacheable(path)) withWriteLock(path) {
@@ -439,7 +445,7 @@ object ArtifactStore {
       val prevFolded = foldedTags(path)
       val dv = nextDataDir(path)
       df.write.mode("overwrite").parquet(s"$path/$dv")
-      val n = df.sparkSession.read.parquet(s"$path/$dv").count()
+      val n = ParquetDir.rowCount(df.sparkSession, s"$path/$dv")
       parentOf.foreach(p => write(s"$path/_GRAFT_PARENT", p))
       atomicWrite(s"$path/_GRAFT_STATE", stateJson(State(dv, n, Set.empty)))
       write(s"$path/_GRAFT_OK", "")
@@ -485,7 +491,7 @@ object ArtifactStore {
     if (cacheDisabled || isUncacheable(path) ||
         !java.nio.file.Files.exists(
           java.nio.file.Paths.get(s"$path/_GRAFT_OK"))) None
-    else stateOf(path).map(s => spark.read.parquet(s"$path/${s.data}"))
+    else stateOf(path).map(s => ParquetDir.read(spark, s"$path/${s.data}"))
 
   /** The ingest batch's OWN delta dir of the chain at `parentPath`, as
     * a frame — the UPSTREAM-DELTA read (round-17, the r16 `weak`'s
@@ -560,7 +566,7 @@ object ArtifactStore {
         .filter(d => tagOf(parentName, new java.io.File(d).getName)
           != excludeTag)
         .foldLeft(base)((acc, d) =>
-          acc.unionByName(spark.read.parquet(dataPath(d))))
+          acc.unionByName(ParquetDir.read(spark, dataPath(d))))
     }
 
   /** Load-or-derive: serve the persisted artifact when present, else
@@ -614,7 +620,7 @@ object ArtifactStore {
   private def resolveChain(spark: SparkSession, parentPath: String,
       parent: DataFrame): DataFrame =
     deltasOf(parentPath).foldLeft(parent) { (acc, d) =>
-      acc.unionByName(spark.read.parquet(dataPath(d)))
+      acc.unionByName(ParquetDir.read(spark, dataPath(d)))
     }
 
   /** Incremental maintenance — the append path the 100 TB ingest story
@@ -724,7 +730,7 @@ object ArtifactStore {
       case None => false
       case Some(parent) =>
         val resolved = deltas.foldLeft(parent) { (acc, d) =>
-          acc.unionByName(spark.read.parquet(dataPath(d)))
+          acc.unionByName(ParquetDir.read(spark, dataPath(d)))
         }
         rewriteChain(spark, parentPath, deltas, Set.empty, resolved)
         true
@@ -772,7 +778,7 @@ object ArtifactStore {
     val prevFolded = foldedTags(parentPath)
     val dv = nextDataDir(parentPath)
     content.write.mode("overwrite").parquet(s"$parentPath/$dv")
-    val n = spark.read.parquet(s"$parentPath/$dv").count()
+    val n = ParquetDir.rowCount(spark, s"$parentPath/$dv")
     val tags = prevFolded ++ extraFolded ++
       deltas.map(d => tagOf(parentName, new java.io.File(d).getName))
     atomicWrite(s"$parentPath/_GRAFT_STATE",

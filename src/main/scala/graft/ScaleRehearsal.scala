@@ -413,7 +413,7 @@ object ScaleRehearsal {
         val postPath = s"$dir/simhash_postings.parquet"
         D.chunksAtLevel(D.simhashesOn(existing), "simhash", level)
           .write.mode("overwrite").parquet(postPath)
-        def admissionChunks = spark.read.parquet(postPath).unionByName(
+        def admissionChunks = ParquetDir.read(spark, postPath).unionByName(
           D.chunksAtLevel(D.simhashesOn(batchDocs), "simhash", level))
         val (outN, sec) = timed(
           D.incrementalHammingOfChunks(admissionChunks, "simhash").count())
@@ -462,7 +462,7 @@ object ScaleRehearsal {
         S.embSigsOf(vecs(existing), bits, dim)
           .write.mode("overwrite").parquet(postPath)
         val allVecs = vecs(existing.unionByName(embBatch))
-        def admissionSigs = spark.read.parquet(postPath).unionByName(
+        def admissionSigs = ParquetDir.read(spark, postPath).unionByName(
           S.embSigsOf(vecs(embBatch), bits, dim))
         val (outN, sec) =
           timed(S.incrementalEmbOfSigs(admissionSigs, allVecs).count())
@@ -514,7 +514,7 @@ object ScaleRehearsal {
         val nEx = existing.count()
         val postPath = s"$dir/ngram_postings_adm.parquet"
         D.ngramPostingsOn(existing).write.mode("overwrite").parquet(postPath)
-        def inv = D.dfFilteredPostings(spark.read.parquet(postPath)
+        def inv = D.dfFilteredPostings(ParquetDir.read(spark, postPath)
           .unionByName(D.ngramPostingsOn(batchDocs)))
         val (outN, sec) = timed(D.incrementalNgramOfEdges(
           D.ngramJaccardTouchingOfPostings(inv)).count())
@@ -548,7 +548,7 @@ object ScaleRehearsal {
         val shPath = s"$dir/cont_shingles_adm.parquet"
         D.shingledMd5On(existing).write.mode("overwrite").parquet(shPath)
         def shOf(batch: DataFrame) =
-          D.containmentShOfShingles(spark.read.parquet(shPath)
+          D.containmentShOfShingles(ParquetDir.read(spark, shPath)
             .unionByName(D.shingledMd5On(batch)))
         def sh = shOf(batchDocs)
         val (outN, sec) = timed(D.incrementalContainmentOfSh(sh).count())
@@ -576,7 +576,7 @@ object ScaleRehearsal {
         val nEx = existing.count()
         val aPath = s"$dir/span_anchors_adm.parquet"
         D.spanAnchorsOn(existing).write.mode("overwrite").parquet(aPath)
-        def win = spark.read.parquet(aPath)
+        def win = ParquetDir.read(spark, aPath)
           .unionByName(D.spanAnchorsOn(batchDocs))
         def prof = D.spansProfileOf(
           win.where(pmod(col("doc_id"), lit(5)) === 0), win, D.SpanDfCap)
@@ -634,7 +634,7 @@ object ScaleRehearsal {
         scaled(Tables.customer(spark, baseDir), k, entityAdmReplica)
           .where(pmod(col("c_custkey"), lit(5)) =!= 0)
           .write.mode("overwrite").parquet(admPath)
-        val existing = spark.read.parquet(admPath)
+        val existing = ParquetDir.read(spark, admPath)
         val nEx = existing.count()
         def all = existing.unionByName(batchCust)
         val (outN, sec) = timed(D.incrementalEntityBlockOn(all).count())
@@ -696,7 +696,7 @@ object ScaleRehearsal {
         // absorb the shared-prefix shingles whose df grows ∝ replicas
         val postPath = s"$dir/ngram_postings_ov.parquet"
         D.ngramPostingsOn(existing).write.mode("overwrite").parquet(postPath)
-        def rawInv = spark.read.parquet(postPath)
+        def rawInv = ParquetDir.read(spark, postPath)
           .unionByName(D.ngramPostingsOn(batchDocs))
         def inv = D.dfFilteredPostings(rawInv)
         val (ngOut, ngSec) = timed(D.incrementalNgramOfEdges(
@@ -711,7 +711,7 @@ object ScaleRehearsal {
         // containment: the sup probe's scan volume under matching content
         val shPath = s"$dir/cont_shingles_ov.parquet"
         D.shingledMd5On(existing).write.mode("overwrite").parquet(shPath)
-        def sh = D.containmentShOfShingles(spark.read.parquet(shPath)
+        def sh = D.containmentShOfShingles(ParquetDir.read(spark, shPath)
           .unionByName(D.shingledMd5On(batchDocs)))
         val (ctOut, ctSec) = timed(D.incrementalContainmentOfSh(sh).count())
         val ctCand = D.incrementalContainmentCandidates(sh).count()
@@ -722,7 +722,7 @@ object ScaleRehearsal {
         val chPath = s"$dir/simhash_chunks_ov.parquet"
         D.chunksAtLevel(D.simhashesOn(existing), "simhash", level)
           .write.mode("overwrite").parquet(chPath)
-        def chunks = spark.read.parquet(chPath).unionByName(
+        def chunks = ParquetDir.read(spark, chPath).unionByName(
           D.chunksAtLevel(D.simhashesOn(batchDocs), "simhash", level))
         val (shOut, shSec) = timed(
           D.incrementalHammingOfChunks(chunks, "simhash").count())
@@ -925,7 +925,7 @@ object ScaleRehearsal {
         val nEx = existing.count()
         val postPath = s"$dir/ngram_postings_fp.parquet"
         D.ngramPostingsOn(existing).write.mode("overwrite").parquet(postPath)
-        val baseInv = spark.read.parquet(postPath)
+        val baseInv = ParquetDir.read(spark, postPath)
         val batchInv = D.ngramPostingsOn(batchDocs)
         val chainA = s"$dir/store/fpostadm_v1_cccccccccccc"
         // delete the DELTA dirs too: they are siblings of the base

@@ -13,12 +13,14 @@ import org.apache.spark.sql.functions._
   * All readers are plain parquet scans — Catalyst pushes filters and
   * column pruning into the scan, so callers should NOT pre-select or
   * cache here; at 100 TB the scan must see the final pruned schema.
+  * Each scan declares the schema its file's footer records
+  * ([[ParquetDir.read]]), so building a reader starts no Spark job.
   */
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+    ParquetDir.read(spark, path(dir, name))
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")

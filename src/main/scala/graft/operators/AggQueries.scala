@@ -796,8 +796,8 @@ object AggQueries {
       : org.apache.spark.sql.DataFrame = {
     val counts = obs
       .select(
-        least(floor(Tables.cents(col("value")).cast("long")
-          / lit(6000000.0)), lit(9.0)).cast("int").as("bucket"),
+        greatest(lit(0.0), least(floor(Tables.cents(col("value")).cast("long")
+          / lit(6000000.0)), lit(9.0))).cast("int").as("bucket"),
         col("early"))
       .groupBy(col("bucket"))
       .agg(sum(when(col("early"), lit(1L)).otherwise(lit(0L))).as("n_early"),
@@ -807,9 +807,11 @@ object AggQueries {
     // exactly ONCE (a second totals aggregate would re-read it; the
     // single-partition window is over bucket-grain rows, never
     // data-sized). The identity limit stamps the structural bound into
-    // the plan (r17 item 6): `bucket` is least(·, 9) — domain
-    // {0..9, null}, ≤ 11 groups — so the limit never drops a row and
-    // the unpartitioned-window census can prove the bound.
+    // the plan (r17 item 6): `bucket` is greatest(0, least(·, 9)) —
+    // domain {0..9}, negative values included (least/greatest skip
+    // nulls, so a null value lands in bucket 9) — so the limit never
+    // drops a row and the unpartitioned-window census can prove the
+    // bound.
     val all = Window.partitionBy()
     val pS = (col("n_early").cast("double") + lit(1.0)) /
       (col("tot_early").cast("double") + lit(10.0))
@@ -849,17 +851,17 @@ object AggQueries {
       : org.apache.spark.sql.DataFrame = {
     val counts = obs
       .select(
-        least(floor(Tables.cents(col("value")).cast("long")
-          / lit(600000.0)), lit(99.0)).cast("int").as("bucket"),
+        greatest(lit(0.0), least(floor(Tables.cents(col("value")).cast("long")
+          / lit(600000.0)), lit(99.0))).cast("int").as("bucket"),
         col("early"))
       .groupBy(col("bucket"))
       .agg(sum(when(col("early"), lit(1L)).otherwise(lit(0L))).as("n_early"),
         sum(when(!col("early"), lit(1L)).otherwise(lit(0L))).as("n_late"))
     // bounded-global-window: both windows run over the ≤100-row bucket
     // aggregate (the KS statistic's CDF grid), never the observations.
-    // Identity limit (r17 item 6): `bucket` is least(·, 99) — domain
-    // {0..99, null}, ≤ 101 groups — a plan-provable maxRows for the
-    // unpartitioned-window census, never a dropped row.
+    // Identity limit (r17 item 6): `bucket` is greatest(0, least(·, 99))
+    // — domain {0..99}, negative values included — a plan-provable
+    // maxRows for the unpartitioned-window census, never a dropped row.
     val cum = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.partitionBy()
@@ -1277,8 +1279,8 @@ object AggQueries {
     },
     "prof_ks_test" ->
       """WITH c AS (
-        |  SELECT CAST(least(floor(floor(o_totalprice * 100.0 + 0.5)
-        |                          / 600000.0), 99.0) AS INT) AS bucket,
+        |  SELECT CAST(greatest(0.0, least(floor(floor(o_totalprice * 100.0 + 0.5)
+        |                          / 600000.0), 99.0)) AS INT) AS bucket,
         |    SUM(CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-01-01'
         |             THEN 1 ELSE 0 END) AS n_early,
         |    SUM(CASE WHEN NOT (CAST(o_orderdate AS DATE) < DATE '1998-01-01')
@@ -1379,8 +1381,8 @@ object AggQueries {
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
     "prof_drift_psi" ->
       """WITH c AS (
-        |  SELECT CAST(least(floor(floor(o_totalprice * 100.0 + 0.5)
-        |                          / 6000000.0), 9.0) AS INT) AS bucket,
+        |  SELECT CAST(greatest(0.0, least(floor(floor(o_totalprice * 100.0 + 0.5)
+        |                          / 6000000.0), 9.0)) AS INT) AS bucket,
         |    SUM(CASE WHEN CAST(o_orderdate AS DATE) < DATE '1998-01-01'
         |             THEN 1 ELSE 0 END) AS n_early,
         |    SUM(CASE WHEN NOT (CAST(o_orderdate AS DATE) < DATE '1998-01-01')

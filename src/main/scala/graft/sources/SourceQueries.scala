@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, Tables}
+import graft.{ParquetDir, Q, Tables}
 import graft.operators.CoreQueries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -164,7 +164,7 @@ object SourceQueries {
       .repartitionByRange(4, col("user_id"))
       .sortWithinPartitions(col("user_id"), col("ts"))
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    ParquetDir.read(spark, out)
       .where(col("user_id").between(10, 19))
       .groupBy(col("user_id"))
       .agg(
@@ -251,7 +251,7 @@ object SourceQueries {
       .sortWithinPartitions(col("zval"))
       .drop("day", "u0", "u1", "d0", "d1", "xg", "yg", "zval")
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    ParquetDir.read(spark, out)
       .where(col("user_id").between(10, 39) &&
         col("ts") >= lit("2024-01-08") && col("ts") < lit("2024-01-15"))
       .groupBy(col("user_id"))
@@ -284,10 +284,10 @@ object SourceQueries {
     val bytes = new java.io.File(frag).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
     val nOut = math.max(1, math.ceil(bytes / (8.0 * 1024 * 1024)).toInt)
-    spark.read.parquet(frag)
+    ParquetDir.read(spark, frag)
       .repartition(nOut)
       .write.mode("overwrite").parquet(compact)
-    spark.read.parquet(compact)
+    ParquetDir.read(spark, compact)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         (sum(Tables.cents(col("value"))) / lit(100.0)).as("total_value"))
@@ -340,7 +340,7 @@ object SourceQueries {
       .withColumn("o_orderstatus", lit("U"))
     val merged = mergeUpsert(base, updates)
     merged.write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    ParquetDir.read(spark, out)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         (sum(Tables.cents(col("o_totalprice"))) / lit(100.0))
@@ -389,7 +389,7 @@ object SourceQueries {
       .agg(count(lit(1)).as("n"), sum(col("c")).as("cents"))
     partial(o.where(col("o_orderdate") < cutoff))
       .write.mode("overwrite").parquet(out)
-    mergePartials(spark.read.parquet(out),
+    mergePartials(ParquetDir.read(spark, out),
       partial(o.where(col("o_orderdate") >= cutoff)))
   }
 

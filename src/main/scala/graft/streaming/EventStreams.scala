@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Q, Tables}
+import graft.{ParquetDir, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -148,11 +148,12 @@ object EventStreams {
   /** Streaming file sources need a declared schema, and the driver has
     * shipped `events.ts` as both INT64 nanos (LongType under
     * `nanosAsLong`) and naive `timestamp[us]` (TimestampNTZType) across
-    * rounds — so declare whatever a batch peek of the same file infers,
-    * then normalize `ts` with [[Tables.normalizeEventTs]] exactly like
-    * the batch reader. The peek reads only footer metadata, not data. */
+    * rounds — so declare whatever the batch reader sees for the same
+    * file, then normalize `ts` with [[Tables.normalizeEventTs]] exactly
+    * like the batch reader. The peek reads only footer metadata, in
+    * this JVM ([[ParquetDir.read]]): no job, no data. */
   private def eventsSchema(spark: SparkSession, dir: String): StructType =
-    spark.read.parquet(s"$dir/events.parquet").schema
+    ParquetDir.read(spark, s"$dir/events.parquet").schema
 
   /** The streaming form of [[evtTumblingWindow]]: readStream over the
     * same parquet, 1-hour tumbling windows with a 2-hour watermark,

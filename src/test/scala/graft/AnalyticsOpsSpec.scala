@@ -705,6 +705,34 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     assert(g0 == 0.0, s"identical eras must give D = 0, got $g0")
   }
 
+  test("drift PSI and KS test: negative values clamp into bucket 0, so " +
+    "the identity limits drop no group even when they span more " +
+    "buckets than the limit") {
+    // PSI: 20 early values in 20 distinct negative $60k buckets (more
+    // than limit(16) groups unclamped) + 1 early in bucket 1; late: 10
+    // in bucket 0, 11 in bucket 1.
+    val psiObs = ((1 to 20).map(b => (-b * 60000.0 - 1000.0, true)) ++
+      Seq((61000.0, true)) ++ Seq.fill(10)((1000.0, false)) ++
+      Seq.fill(11)((61000.0, false))).toDF("value", "early")
+    def share(n: Long) = (n + 1.0) / (21.0 + 10.0)
+    def term(ne: Long, nl: Long) =
+      r6((share(ne) - share(nl)) * math.log(share(ne) / share(nl)))
+    val psi = operators.AggQueries.driftPsiOn(psiObs.repartition(4))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toList
+    assert(psi == List((0, 20L, 10L, term(20, 10)), (1, 1L, 11L, term(1, 11))),
+      psi.toString)
+    // KS: 200 early values in 200 distinct negative $6k buckets (more
+    // than limit(128) groups unclamped), 200 late ones in bucket 1 —
+    // the clamped CDFs are early 1.0 / late 0.0 at bucket 0, so D = 1.
+    val ksObs = ((1 to 200).map(b => (-b * 6000.0 - 1.0, true)) ++
+      Seq.fill(200)((6001.0, false))).toDF("value", "early")
+    val ks = operators.AggQueries.ksTestOn(ksObs.repartition(4))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .head
+    assert(ks == (200L, 200L, 1.0), ks.toString)
+  }
+
   test("inter-arrival: hand-spaced gaps aggregate exactly, an equal-" +
     "timestamp tie orders by event_id, single events emit no gap") {
     // user 1 / type a: t = 0s, 10s, 40s → gaps 10s, 30s
